@@ -2,7 +2,8 @@ package graft.io
 
 import graft.model.{DestinationType, TransactionalType}
 import graft.schema.DestinationSchemas
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
@@ -78,30 +79,40 @@ final case class UploadedLog(spark: SparkSession, path: String, tt: Transactiona
     // even though Spark itself reads it fine
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val raw =
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-        spark.read.schema(schema).parquet(path)
-      else
-        // LocalRelation-backed empty frame: carries ACCURATE zero-size stats,
-        // so the downstream anti-join broadcast gate sees "tiny" (an
-        // emptyRDD-backed frame reports unknown/max size and would force the
-        // first run — no log yet — into a full shuffle of the source).
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    graft.transform.Transforms.retentionFilter(raw)
+    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
+      graft.transform.Transforms.retentionFilter(spark.read.schema(schema).parquet(path))
+    else
+      // LocalRelation-backed empty frame: carries ACCURATE zero-size stats,
+      // so the downstream anti-join broadcast gate sees "tiny" (an
+      // emptyRDD-backed frame reports unknown/max size and would force the
+      // first run — no log yet — into a full shuffle of the source). No
+      // retention filter: it has nothing to drop, and its `now - 15 days`
+      // literal would make Spark generate (and compile) a fresh predicate
+      // class on every run.
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
   }
 
-  /** Append successfully-uploaded keys with the current timestamp.
+  /** Append successfully-uploaded keys with the current timestamp, taken
+    * once at append time (after every send of the run).
     * Serialized per path: two concurrently-running branches can share one
     * control table (same source, same key type), and concurrent append jobs
     * to one directory race on the output committer's staging dir.
+    *
+    * The timestamp is set by a row mapping whose closure captures it, never
+    * as a Catalyst literal (`current_timestamp()`, `lit(now)`): Spark
+    * inlines timestamp literals into the generated Java, so each run would
+    * compile a new class and churn the codegen cache. This way the
+    * writeback plan is the same in every run.
     */
   def append(successful: DataFrame): Unit = {
     if (tt.keyColumns.nonEmpty) {
       UploadedLog.lockFor(path).synchronized {
+        val stamp = java.time.Instant.now()
+        // lenient: takes the Instant whatever spark.sql.datetime.java8API is
+        val stamped = ExpressionEncoder(schema, lenient = true)
         successful
           .select(tt.keyColumns.map(c => col(c).cast(StringType).as(c)): _*)
-          .withColumn("timestamp", current_timestamp())
-          .select("timestamp", tt.keyColumns: _*)
+          .map(r => Row.fromSeq(stamp +: r.toSeq))(stamped)
           .write.mode("append").parquet(path)
       }
     }

@@ -67,12 +67,49 @@ final case class PipelineReport(results: Seq[ExecutionResult], distinctExecution
   def totalUploaded: Long = results.map(_.succeeded).sum
 }
 
-/** Per-row sink outcome: feeds writeback (success-only keys) + report. */
+/** Per-row sink outcome: feeds the writeback (success-only keys). */
 final case class RowOutcome(
     executionKey: String,
     keys: Map[String, String],
     success: Boolean,
     error: Option[String])
+
+/** Report counts of some sent batches. `firstError` carries the
+  * (partition, batch index) of the batch it came from, so that merging
+  * tallies in any order keeps the error that comes first in the outcome
+  * frame.
+  */
+private[pipeline] final case class Tally(attempted: Long, succeeded: Long,
+    firstError: Option[((Int, Int), String)]) {
+  def +(o: Tally): Tally = Tally(attempted + o.attempted, succeeded + o.succeeded,
+    (firstError ++ o.firstError).minByOption(_._1))
+  def error: Option[String] = firstError.map(_._2)
+}
+
+private[pipeline] object Tally {
+  val zero: Tally = Tally(0L, 0L, None)
+
+  def of(batch: (Int, Int), outcomes: Seq[RowOutcome]): Tally =
+    Tally(outcomes.size.toLong, outcomes.count(_.success).toLong,
+      outcomes.collectFirst { case RowOutcome(_, _, _, Some(e)) => batch -> e })
+}
+
+/** Accumulator the send tasks add their batches' [[Tally]] to. */
+private[pipeline] final class SendTally extends org.apache.spark.util.AccumulatorV2[Tally, Tally] {
+  private var t = Tally.zero
+  override def isZero: Boolean = t == Tally.zero
+  override def copy(): SendTally = { val c = new SendTally; c.t = t; c }
+  override def reset(): Unit = t = Tally.zero
+  override def add(v: Tally): Unit = t = t + v
+  override def merge(other: org.apache.spark.util.AccumulatorV2[Tally, Tally]): Unit =
+    t = t + other.value
+  override def value: Tally = t
+}
+
+/** One execution's send pass: the pinned per-row outcomes (read by the
+  * writeback; free them with `Checkpoints.release`) and their tally.
+  */
+private[pipeline] final case class SendPass(outcomes: DataFrame, tally: Tally)
 
 object Pipeline {
 
@@ -149,36 +186,27 @@ object Pipeline {
               d.withColumn(k, col(k).cast("string"))
             else d)
           df.persist(StorageLevel.MEMORY_AND_DISK)
+          val sent = scala.collection.mutable.ArrayBuffer.empty[(Execution, SendPass)]
           try {
-            val outcomesPerExec = branchExecutions.map { ex =>
+            branchExecutions.foreach { ex =>
               val hashed = branch.hasher.fold(df)(h => h(df, ex.destination.metadata))
-              ex -> uploadStage(spark, hashed, ex, branch, opts)
+              sent += ex -> uploadStage(spark, hashed, ex, branch, opts)
             }
-            outcomesPerExec.foreach { case (ex, outcomes) =>
-              val agg = outcomes.groupBy("executionKey").agg(
-                count(lit(1)).as("attempted"),
-                sum(when(col("success"), 1L).otherwise(0L)).as("succeeded"),
-                first(col("error"), ignoreNulls = true).as("firstError"))
-                .collect()
-              val (attempted, succeeded, err) = agg.headOption
-                .map(r => (r.getAs[Long]("attempted"), r.getAs[Long]("succeeded"),
-                  Option(r.getAs[String]("firstError"))))
-                .getOrElse((0L, 0L, None))
-              err.foreach(m => handler.addError(ex, m))
-              branchResults += ExecutionResult(ex.key, dt.name, attempted, succeeded, err)
+            sent.foreach { case (ex, SendPass(_, t)) =>
+              t.error.foreach(m => handler.addError(ex, m))
+              branchResults += ExecutionResult(ex.key, dt.name, t.attempted, t.succeeded, t.error)
             }
             // Transactional writeback: group successful rows of the whole
             // source, append keys once (transactional_events_results_writer
             // .py:29-78; ALL key cols — reference ORDER_ID_TIME bug fixed).
             branch.writebackTransactional.foreach { tt =>
-              val successful = outcomesPerExec.map(_._2.filter(col("success"))).reduce(_ union _)
+              val successful = sent.map(_._2.outcomes.filter(col("success"))).reduce(_ union _)
               if (tt.keyColumns.nonEmpty) {
                 val keyed = successful.select(
                   tt.keyColumns.map(k => col("keys")(k).as(k)): _*)
                 UploadedLog(spark, ds.uploadedLogPath, tt).append(keyed)
               }
             }
-            outcomesPerExec.foreach(_._2.unpersist())
           } catch {
             // Driver-side failures past the read (writeback append, an
             // aborted send job) must stay INSIDE the branch: record the
@@ -191,16 +219,23 @@ object Pipeline {
                 branchResults += ExecutionResult(ex.key, dt.name, 0L, 0L,
                   Some(s"Error uploading data: ${e.getMessage}"))
               }
-          } finally df.unpersist()
+          } finally {
+            sent.foreach(p => release(p._2.outcomes))
+            df.unpersist()
+          }
       }
     }
     branchResults.result()
   }
 
   /** The sink stage: distributed batching + upload, returning the per-row
-    * outcome Dataset (eagerly localCheckpoint'ed — the send side effects run
-    * exactly once across the downstream aggregation and writeback actions,
-    * and the truncated lineage makes silent re-sends impossible).
+    * outcome Dataset and its tally. The outcomes are pinned eagerly: the
+    * pin job is the one pass that sends, the writeback reads the stored
+    * outcomes, and the truncated lineage makes silent re-sends impossible.
+    * The report counts (attempted, succeeded, first error) are tallied by
+    * the send tasks of that job into a [[SendTally]] accumulator — the pin
+    * job is a result stage, so Spark merges each successful task's update
+    * exactly once, and the report costs no pass over the outcomes.
     *
     * Batch `iteration` is GLOBAL per execution and 1-based (drives REPLACE
     * remove_all / DV create-vs-edit): partition batch offsets are
@@ -214,7 +249,7 @@ object Pipeline {
     * index its renderer never reads — one pass, not two, per execution.
     */
   private[pipeline] def uploadStage(spark: SparkSession, df: DataFrame,
-      execution: Execution, branch: BranchSpec, opts: PipelineOptions): DataFrame = {
+      execution: Execution, branch: BranchSpec, opts: PipelineOptions): SendPass = {
     import spark.implicits._
     val schema = df.schema
     val batchSize = branch.batchSize
@@ -316,6 +351,18 @@ object Pipeline {
       out
     }
 
+    // Updated ONLY by the send tasks below, all of which run inside an
+    // eager pin job; batches are ordered by (partition, batch index), the
+    // order of the pinned frame (phase A's batch is the first non-empty
+    // partition's batch 0), so the tally's first error is the frame's.
+    val tally = new SendTally
+    spark.sparkContext.register(tally)
+    def sendTallied(pid: Int, localIdx: Int, rows: Seq[Row], iteration: Long): Seq[RowOutcome] = {
+      val out = sendBatch(rows, iteration)
+      tally.add(Tally.of((pid, localIdx), out))
+      out
+    }
+
     def checkpointed(outcomes: org.apache.spark.rdd.RDD[RowOutcome]): DataFrame =
       // Eager localCheckpoint: runs the send job ONCE, stores the outcomes,
       // and truncates lineage — executor loss or cache eviction can never
@@ -325,13 +372,15 @@ object Pipeline {
       // role.
       spark.createDataset(outcomes).toDF().pinned()
 
+    def tallied(outcomes: DataFrame): SendPass = SendPass(outcomes, tally.value)
+
     if (!branch.needsIteration) {
-      checkpointed(rdd.mapPartitionsWithIndex { (pid, it) =>
+      tallied(checkpointed(rdd.mapPartitionsWithIndex { (pid, it) =>
         val offset = batchOffsets.getOrElse(pid, 0L)
         it.grouped(batchSize).zipWithIndex.flatMap { case (rows, localIdx) =>
-          sendBatch(rows, offset + localIdx + 1)
+          sendTallied(pid, localIdx, rows, offset + localIdx + 1)
         }
-      })
+      }))
     } else if (counts.values.sum == 0L) {
       // Reference semantics: an EMPTY source still yields ONE empty batch
       // (batches_from_executions.py:113-131), so iteration-1 cleanup
@@ -345,7 +394,7 @@ object Pipeline {
       val synthetic = errs.headOption.toSeq.map(msg =>
         RowOutcome(execKey, Map.empty, success = false,
           Some(s"Error uploading data: $msg")))
-      spark.createDataset(synthetic).toDF().pinned()
+      SendPass(spark.createDataset(synthetic).toDF().pinned(), Tally.of((0, 0), synthetic))
     } else {
       // Iteration-1 requests carry SIDE EFFECTS later batches depend on
       // (REPLACE remove_all, job create, data-import erase) — with all
@@ -356,16 +405,17 @@ object Pipeline {
       val firstPid = sortedPids.find(p => counts(p) > 0L).get
       val phaseA = checkpointed(rdd.mapPartitionsWithIndex { (pid, it) =>
         if (pid != firstPid) Iterator.empty
-        else it.grouped(batchSize).take(1).flatMap(rows => sendBatch(rows, 1L))
+        else it.grouped(batchSize).take(1).flatMap(rows => sendTallied(pid, 0, rows, 1L))
       })
       val phaseB = checkpointed(rdd.mapPartitionsWithIndex { (pid, it) =>
         val offset = batchOffsets.getOrElse(pid, 0L)
         it.grouped(batchSize).zipWithIndex.flatMap { case (rows, localIdx) =>
           if (pid == firstPid && localIdx == 0) Iterator.empty
-          else sendBatch(rows, offset + localIdx + 1)
+          else sendTallied(pid, localIdx, rows, offset + localIdx + 1)
         }
       })
-      phaseA.unionByName(phaseB).pinned()
+      // both phases are pinned already: the union reads their blocks
+      tallied(phaseA.unionByName(phaseB))
     }
   }
 

@@ -65,4 +65,22 @@ object Checkpoints {
         case None => ds.localCheckpoint(eager)
       }
   }
+
+  /** Free the storage behind a frame built from pins: `Dataset.unpersist`
+    * only drops CacheManager entries, so a pin's RDD would stay in
+    * `getPersistentRDDs` (and its blocks in storage) until ContextCleaner
+    * happens to see it collected. Unpersists every pinned RDD under `ds`
+    * (a union of pins has several); in reliable mode it also deletes the
+    * checkpoint files. `ds` must not be read afterwards.
+    */
+  def release(ds: Dataset[_]): Unit =
+    ds.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+        r.rdd.getCheckpointFile.foreach { f =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          p.getFileSystem(ds.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+        }
+      case _ =>
+    }
 }

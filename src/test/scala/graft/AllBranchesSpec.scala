@@ -3,7 +3,8 @@ package graft
 import graft.config.JsonConfigSource
 import graft.pipeline.{Branches, Pipeline, PipelineOptions}
 import graft.sink.RecordingTransport
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.model.Execution
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.scalatest.BeforeAndAfterEach
 
 /** Every destination branch end-to-end through the real pipeline: source
@@ -12,14 +13,59 @@ import org.scalatest.BeforeAndAfterEach
   * chain fails the branch here.
   */
 class AllBranchesSpec extends SparkTestBase with BeforeAndAfterEach {
-  import spark.implicits._
+  import AllBranchesSpec._
 
   override def beforeEach(): Unit = RecordingTransport.reset()
 
-  private val T = "2024-05-01T10:00:00.000000"
+  test("all 18 destination branches run end-to-end with zero errors") {
+    val rows = 3
+    val executions = AllBranchesSpec.executions(spark,
+      java.nio.file.Files.createTempDirectory("graft_all").toString, rows)
+    assert(executions.size == branches.size)
+    val report = Pipeline.run(spark, executions,
+      PipelineOptions(transport = RecordingTransport()))
+
+    val byType = report.results.map(r => r.destinationType -> r).toMap
+    branches.foreach { case (dt, _, _, _) =>
+      val r = byType(dt)
+      assert(r.error.isEmpty, s"$dt failed: ${r.error}")
+      assert(r.succeeded == rows, s"$dt uploaded ${r.succeeded}/${r.attempted}")
+    }
+    assert(report.exitCode == 0)
+    assert(Branches.all.size == branches.size)
+
+    // every branch rendered at least one request
+    val kindsByExec = RecordingTransport.sent.toArray(Array.empty[RecordingTransport.Sent])
+      .groupBy(_.executionKey)
+    branches.foreach { case (dt, _, _, _) =>
+      assert(kindsByExec.contains(s"src $dt -> dst $dt"), s"no requests sent for $dt")
+    }
+  }
+
+  test("csv file sources run through the same pipeline path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val path = s"$dir/conversions.csv"
+    val csv = "gclid,time,amount\n" +
+      (1 to 4).map(i => s"g$i,$T,${i}.5").mkString("\n")
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), csv.getBytes)
+    val config = s"""{
+      "GoogleAdsAccountId": "1234567890",
+      "Sources": [{"Name": "s", "Type": "FILE", "Dataset": "csv", "Table": "$path"}],
+      "Destinations": [{"Name": "d", "Type": "ADS_OFFLINE_CONVERSION", "Metadata": ["Conv"]}],
+      "Connections": [{"Enabled": true, "Source": "s", "Destination": "d"}]
+    }"""
+    val report = Pipeline.run(spark, JsonConfigSource.fromString(config).executions(),
+      PipelineOptions(transport = RecordingTransport()))
+    assert(report.exitCode == 0)
+    assert(report.totalUploaded == 4)
+  }
+}
+
+object AllBranchesSpec {
+  val T = "2024-05-01T10:00:00.000000"
 
   /** (destinationType, metadata, source column names, example row) */
-  private val branches: Seq[(String, Seq[String], Seq[String], Seq[String])] = Seq(
+  val branches: Seq[(String, Seq[String], Seq[String], Seq[String])] = Seq(
     ("ADS_SSD_UPLOAD", Seq("Conv", "ext"), Seq("email", "time", "amount"),
       Seq("a@x.com", T, "120")),
     ("ADS_SSI_UPLOAD", Seq("Conv", "ext", "true", "ck"),
@@ -59,10 +105,10 @@ class AllBranchesSpec extends SparkTestBase with BeforeAndAfterEach {
     ("APPSFLYER_S2S_EVENTS", Seq("com.app"),
       Seq("uuid", "appsflyer_id", "event_eventName"), Seq("u-1", "af1", "purchase")))
 
-  test("all 18 destination branches run end-to-end with zero errors") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_all").toString
-    val rows = 3
-
+  /** One `rows`-row parquet source per branch under `dir`, and the
+    * executions of a config that connects each to its destination.
+    */
+  def executions(spark: SparkSession, dir: String, rows: Int): Seq[Execution] = {
     val sources = branches.map { case (dt, _, cols, example) =>
       val path = s"$dir/$dt.parquet"
       val data = (1 to rows).map { i =>
@@ -98,43 +144,6 @@ class AllBranchesSpec extends SparkTestBase with BeforeAndAfterEach {
       "Connections": [$connJson]
     }"""
 
-    val executions = JsonConfigSource.fromString(config).executions()
-    assert(executions.size == branches.size)
-    val report = Pipeline.run(spark, executions,
-      PipelineOptions(transport = RecordingTransport()))
-
-    val byType = report.results.map(r => r.destinationType -> r).toMap
-    branches.foreach { case (dt, _, _, _) =>
-      val r = byType(dt)
-      assert(r.error.isEmpty, s"$dt failed: ${r.error}")
-      assert(r.succeeded == rows, s"$dt uploaded ${r.succeeded}/${r.attempted}")
-    }
-    assert(report.exitCode == 0)
-    assert(Branches.all.size == branches.size)
-
-    // every branch rendered at least one request
-    val kindsByExec = RecordingTransport.sent.toArray(Array.empty[RecordingTransport.Sent])
-      .groupBy(_.executionKey)
-    branches.foreach { case (dt, _, _, _) =>
-      assert(kindsByExec.contains(s"src $dt -> dst $dt"), s"no requests sent for $dt")
-    }
-  }
-
-  test("csv file sources run through the same pipeline path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    val path = s"$dir/conversions.csv"
-    val csv = "gclid,time,amount\n" +
-      (1 to 4).map(i => s"g$i,$T,${i}.5").mkString("\n")
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), csv.getBytes)
-    val config = s"""{
-      "GoogleAdsAccountId": "1234567890",
-      "Sources": [{"Name": "s", "Type": "FILE", "Dataset": "csv", "Table": "$path"}],
-      "Destinations": [{"Name": "d", "Type": "ADS_OFFLINE_CONVERSION", "Metadata": ["Conv"]}],
-      "Connections": [{"Enabled": true, "Source": "s", "Destination": "d"}]
-    }"""
-    val report = Pipeline.run(spark, JsonConfigSource.fromString(config).executions(),
-      PipelineOptions(transport = RecordingTransport()))
-    assert(report.exitCode == 0)
-    assert(report.totalUploaded == 4)
+    JsonConfigSource.fromString(config).executions()
   }
 }

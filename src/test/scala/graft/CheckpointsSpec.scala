@@ -96,6 +96,29 @@ class CheckpointsSpec extends SparkTestBase {
     } finally spark.conf.unset(Checkpoints.StorageConf)
   }
 
+  test("release frees a pin's storage in both modes") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val local = spark.range(0, 100000).toDF("id").pinned()
+    assert(sc.getPersistentRDDs.keySet != before, "a local pin is a persisted RDD")
+    // Dataset.unpersist only drops CacheManager entries: the pin stays
+    local.unpersist(blocking = true)
+    assert(sc.getPersistentRDDs.keySet != before)
+    Checkpoints.release(local)
+    assert(sc.getPersistentRDDs.keySet == before)
+
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt-release")
+    def files(): Long = java.nio.file.Files.walk(ckptDir)
+      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+    withReliable(Some(ckptDir.toString)) {
+      val durable = spark.range(0, 1000).toDF("id").pinned()
+      assert(files() > 0)
+      Checkpoints.release(durable)
+      assert(files() == 0, "released reliable pin left its checkpoint files")
+      assert(sc.getPersistentRDDs.keySet == before)
+    }
+  }
+
   test("an iterative operator is mode-oblivious: pageRank equal under both") {
     val edges = spark.range(0, 300).toDF("i").select(
       col("i").as("src"), ((col("i") * 7 + 3) % 300).as("dst"),

@@ -26,7 +26,7 @@ class RateLimitSpec extends graft.SparkTestBase {
       .repartition(4)
     val opts = PipelineOptions(transport = RecordingTransport())
     val t0 = System.nanoTime()
-    val outcomes = Pipeline.uploadStage(spark, df, execution, branch, opts)
+    val outcomes = Pipeline.uploadStage(spark, df, execution, branch, opts).outcomes
     val ok = outcomes.filter(col("success")).count()
     val elapsedSec = (System.nanoTime() - t0) / 1e9
     assert(ok == n)

@@ -39,7 +39,7 @@ class ReplaceHashDropSpec extends graft.SparkTestBase with BeforeAndAfterEach {
       Iterator((pid, it.size))).collect().toMap
     assert(postCounts(0) == 0 && postCounts(1) == 2, s"counts: $postCounts")
     val outcomes = Pipeline.uploadStage(spark, hashed, execution, branch,
-      PipelineOptions(transport = RecordingTransport()))
+      PipelineOptions(transport = RecordingTransport())).outcomes
     assert(outcomes.count() == 2)
     val sent = RecordingTransport.sent.toArray(Array.empty[RecordingTransport.Sent])
     val opsBodies = sent.filter(_.req.kind == "add_offline_user_data_job_operations").map(_.req.body)
@@ -64,7 +64,7 @@ class ReplaceHashDropSpec extends graft.SparkTestBase with BeforeAndAfterEach {
       Seq[Row](Row(null, null), Row(null, null)), 2), schema)
     val hashed = branch.hasher.get(df, execution.destination.metadata)
     Pipeline.uploadStage(spark, hashed, execution, branch,
-      PipelineOptions(transport = RecordingTransport())).count()
+      PipelineOptions(transport = RecordingTransport())).outcomes.count()
     val sent = RecordingTransport.sent.toArray(Array.empty[RecordingTransport.Sent])
     // non-empty pre-hash, empty post-hash → the ONE-empty-batch cleanup
     // must still clear the stale audience

@@ -8,6 +8,12 @@ families get a 100x-vs-sf0.01 data point. Distributions are extrapolated
 from /root/testdata/sf0.1 — close enough for ratio analysis, NOT a
 replacement for the driver's correctness corpora. Seeded + deterministic.
 
+Value domains follow the sf corpora (event types, two-decimal event
+values, 1995-2001 order/ship dates, part names, brands and types): rows
+that filter or group on those values (q5, q9, q_markov_attribution's fixed
+channel list) return nothing, or cannot match their oracle, on any other
+domain.
+
 Usage: python3 tools/gen_sf.py <scale-vs-sf0.1> <out dir>   # e.g. 10 /tmp/sf1
 """
 import sys, os
@@ -79,14 +85,15 @@ save("embeddings", f"""
   FROM range(0, {N_EMB}) t(i)
 """)
 
-# events: 30-day window, zipf-ish users, 5 types
+# events: 30-day window, zipf-ish users, the sf corpora's 5 event types,
+# exponential values (mean 50) with two decimals
 save("events", f"""
   SELECT i AS event_id,
     TIMESTAMP '2024-01-01' + to_seconds(floor(random() * 2591999)::INT)
       + to_microseconds(floor(random() * 999999)::INT) AS ts,
     floor(power(random(), 2.0) * {int(1500 * mult)})::BIGINT AS user_id,
-    (['click','view','purchase','scroll','share'])[1 + floor(random()*5)::INT] AS event_type,
-    round(random() * 500, 4) AS value,
+    (['click','signup','error','view','purchase'])[1 + floor(random()*5)::INT] AS event_type,
+    round(-50 * ln(1 - random()), 2) AS value,
     '{{"k":' || floor(random()*100)::INT || '}}' AS props
   FROM range(0, {N_EVT}) t(i)
 """)
@@ -96,7 +103,7 @@ save("orders", f"""
     floor(random() * {N_CUST})::BIGINT AS o_custkey,
     (['O','F','P'])[1 + floor(random()*3)::INT] AS o_orderstatus,
     round(1000 + random() * 400000, 2) AS o_totalprice,
-    TIMESTAMP '2023-01-01' + to_days(floor(random() * 699)::INT) AS o_orderdate,
+    TIMESTAMP '1995-01-01' + to_days(floor(random() * 2404)::INT) AS o_orderdate,
     (['1-URGENT','2-HIGH','3-MEDIUM','4-NOT SPECIFIED','5-LOW'])[1 + floor(random()*5)::INT] AS o_orderpriority
   FROM range(0, {N_ORD}) t(i)
 """)
@@ -112,7 +119,7 @@ save("lineitem", f"""
     round(floor(random() * 8)::INT / 100.0, 2) AS l_tax,
     (['A','N','R'])[1 + floor(random()*3)::INT] AS l_returnflag,
     (['O','F'])[1 + floor(random()*2)::INT] AS l_linestatus,
-    TIMESTAMP '2023-01-01' + to_days(floor(random() * 760)::INT) AS l_shipdate
+    TIMESTAMP '1995-01-02' + to_days(floor(random() * 2498)::INT) AS l_shipdate
   FROM range(0, {N_LINE}) t(i)
 """)
 
@@ -131,10 +138,14 @@ save("supplier", f"""
   FROM range(0, {N_SUPP}) t(i)
 """)
 
+# sf corpora's part domains: "<adjective> <noun>" names, Brand#1..25,
+# one-word types
 save("part", f"""
-  SELECT i AS p_partkey, 'part ' || (i % 3000) AS p_name,
-    'Brand#' || (1 + floor(random()*5)::INT) || (1 + floor(random()*5)::INT) AS p_brand,
-    (['ECONOMY','STANDARD','PROMO','SMALL','LARGE'])[1 + floor(random()*5)::INT] || ' CASE' AS p_type,
+  SELECT i AS p_partkey,
+    (['blue','old','small','new','large','hot','cold','red'])[1 + floor(random()*8)::INT] || ' ' ||
+    (['widget','gizmo','ring','gear','bolt','plate','rod','anvil'])[1 + floor(random()*8)::INT] AS p_name,
+    'Brand#' || (1 + floor(random()*25)::INT) AS p_brand,
+    (['LARGE','ECONOMY','STANDARD','SMALL','MEDIUM','PROMO'])[1 + floor(random()*6)::INT] AS p_type,
     1 + floor(random() * 50)::INT AS p_size,
     round(900 + (i % 200) * 10 + random() * 100, 2) AS p_retailprice
   FROM range(0, {N_PART}) t(i)
@@ -153,7 +164,7 @@ checks = [
     ("orders", "o_orderstatus IS NULL OR o_orderpriority IS NULL OR o_custkey >= " + str(N_CUST)),
     ("lineitem", "l_returnflag IS NULL OR l_linestatus IS NULL OR l_orderkey >= " + str(N_ORD)),
     ("customer", "c_mktsegment IS NULL"),
-    ("part", "p_type IS NULL"),
+    ("part", "p_type IS NULL OR p_name IS NULL"),
     ("documents", "text IS NULL OR lang IS NULL"),
 ]
 for t, pred in checks:
